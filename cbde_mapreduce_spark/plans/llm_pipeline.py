@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cbde_mapreduce_spark.functions.texttools import shingles, tokens
-from cbde_mapreduce_spark.operators.ckpt import release_local_checkpoint
+from cbde_mapreduce_spark.operators.ckpt import RoundState
 from cbde_mapreduce_spark.plans.registry import query
 from cbde_mapreduce_spark.sources import load_table
 
@@ -475,61 +475,57 @@ def bpe_merges_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.trim(F.regexp_replace("word", "(.)", "$1 ")).alias("seq"), "n"
     )
     merges = None
-    prev_words = None
-    for r in range(1, _BPE_ROUNDS + 1):
-        toks = F.split("seq", " ")
-        pairs = (
-            # single-symbol sequences yield no pairs; filtering them also
-            # guards Spark's sequence(1, 0), which counts DOWN when start>stop
-            words.filter(F.size(toks) > 1)
-            .select(
-                F.explode(
-                    F.transform(
-                        F.sequence(F.lit(1), F.size(toks) - 1),
-                        lambda i: F.concat_ws(
-                            " ", F.element_at(toks, i), F.element_at(toks, i + 1)
-                        ),
-                    )
-                ).alias("pair"),
-                "n",
+    with RoundState() as rs:
+        for r in range(1, _BPE_ROUNDS + 1):
+            toks = F.split("seq", " ")
+            pairs = (
+                # single-symbol sequences yield no pairs; filtering them also
+                # guards Spark's sequence(1, 0), which counts DOWN when start>stop
+                words.filter(F.size(toks) > 1)
+                .select(
+                    F.explode(
+                        F.transform(
+                            F.sequence(F.lit(1), F.size(toks) - 1),
+                            lambda i: F.concat_ws(
+                                " ", F.element_at(toks, i), F.element_at(toks, i + 1)
+                            ),
+                        )
+                    ).alias("pair"),
+                    "n",
+                )
+                .groupBy("pair")
+                .agg(F.sum("n").alias("c"))
             )
-            .groupBy("pair")
-            .agg(F.sum("n").alias("c"))
-        )
-        best = (
-            pairs.orderBy(F.desc("c"), F.asc("pair"))
-            .limit(1)
-            .select(
-                F.lit(r).cast("int").alias("round"),
-                "pair",
-                F.col("c").alias("pair_count"),
+            # pin the 1-row winner: computed once (not re-derived by both its
+            # consumers), and the returned merges union then reads ONLY these
+            # tiny checkpoints — which is what lets the vocabulary-sized
+            # per-round word tables below be released as they are superseded
+            # instead of accumulating for the session
+            best = rs.keep(
+                pairs.orderBy(F.desc("c"), F.asc("pair"))
+                .limit(1)
+                .select(
+                    F.lit(r).cast("int").alias("round"),
+                    "pair",
+                    F.col("c").alias("pair_count"),
+                )
+                .localCheckpoint()
             )
-            # pin the 1-row winner: computed once (not re-derived by both
-            # its consumers), and the returned merges union then reads ONLY
-            # these tiny checkpoints — which is what lets the vocabulary-
-            # sized per-round word tables below be released as they are
-            # superseded instead of accumulating for the session
-            .localCheckpoint()
-        )
-        merges = best if merges is None else merges.unionByName(best)
-        words = (
-            words.crossJoin(F.broadcast(best.select("pair")))
-            .withColumn(
-                "seq",
-                F.trim(
-                    F.expr(
-                        "replace(' ' || seq || ' ', ' ' || pair || ' ', "
-                        "' ' || replace(pair, ' ', '') || ' ')"
-                    )
-                ),
+            merges = best if merges is None else merges.unionByName(best)
+            words = rs.step(  # truncate per-round lineage, same as CC/BFS
+                words.crossJoin(F.broadcast(best.select("pair")))
+                .withColumn(
+                    "seq",
+                    F.trim(
+                        F.expr(
+                            "replace(' ' || seq || ' ', ' ' || pair || ' ', "
+                            "' ' || replace(pair, ' ', '') || ' ')"
+                        )
+                    ),
+                )
+                .select("seq", "n")
             )
-            .select("seq", "n")
-            .localCheckpoint()  # truncate per-round lineage, same as CC/BFS
-        )
-        release_local_checkpoint(prev_words)  # superseded round: unreferenced
-        prev_words = words
-    release_local_checkpoint(prev_words)  # merges reads only the best ckpts
-    return merges
+        return merges
 
 
 @query(

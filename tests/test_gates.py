@@ -5,7 +5,6 @@ vertex/catalog sets past ~4M rows), so force it here."""
 
 from __future__ import annotations
 
-import cbde_mapreduce_spark.plans.graph_q as G
 from cbde_mapreduce_spark.operators import gates
 from cbde_mapreduce_spark.plans import REGISTRY
 
@@ -18,7 +17,6 @@ def _rows(spark, sf, name):
 
 def test_shuffle_fallback_value_identical(spark, sf_smoke, monkeypatch):
     ref = {n: _rows(spark, sf_smoke, n) for n in GATED}
-    monkeypatch.setattr(G, "_BCAST_MAX_ROWS", -1)  # every gate trips
-    monkeypatch.setattr(gates, "BCAST_MAX_ROWS", -1)
+    monkeypatch.setattr(gates, "BCAST_MAX_ROWS", -1)  # every gate trips
     for n in GATED:
         assert _rows(spark, sf_smoke, n) == ref[n], f"{n} diverged off-gate"

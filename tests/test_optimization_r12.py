@@ -60,7 +60,7 @@ def test_persist_disk_preserves_partitioning_and_ordering(spark, sf_smoke):
     (operators/ckpt.py::persist_disk) carrying the repartition +
     sortWithinPartitions layout through the InMemoryRelation UNDER AQE —
     which localCheckpoint does NOT (it records UnknownPartitioning; measured
-    r12, the reason the edge sets moved from local_checkpoint_disk to
+    r12, the reason the edge sets moved from a DISK_ONLY localCheckpoint to
     persist_disk). If a Spark upgrade or a session-conf change (e.g.
     canChangeCachedPlanOutputPartitioning=true) drops the guarantee, the
     graph loops silently pay a full |E| shuffle + sort per round again —
